@@ -102,10 +102,14 @@ class IngestPipeline:
             .start()
         )
 
-    def run_available(self, timeout_s: int = 120) -> None:
+    def run_available(self, timeout_s: float = 120) -> None:
         """Process all currently-landed files once, then stop. Bounded:
         if the query hasn't drained within ``timeout_s`` it is stopped
-        rather than blocking the caller forever."""
+        and ``TimeoutError`` is raised — the landed set may be only
+        partly ingested, so the caller must not treat it as loaded.
+        A later call resumes from the checkpoint: a batch cut off
+        mid-write is replayed into its own subdir, and files it never
+        reached are read then, so every row still loads exactly once."""
         q = (
             self._stream().writeStream
             .foreachBatch(self._write_batch)
@@ -115,6 +119,10 @@ class IngestPipeline:
         )
         if not q.awaitTermination(timeout=timeout_s):
             q.stop()
+            raise TimeoutError(
+                f"ingest of {self.landing_dir} did not drain within "
+                f"{timeout_s} s; stopped with the landed set possibly "
+                f"partly ingested")
 
     def table(self):
         return self.spark.read.schema(

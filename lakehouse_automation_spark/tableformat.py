@@ -40,6 +40,15 @@ Scale notes (100-TB design):
   file-statistics pattern), so ``scan()`` admits individual files —
   both pruning levels are driver-side dict lookups with zero file
   I/O before the surviving files are read.
+- Commit metadata costs no Spark job: per-file row counts and the
+  chunk's Spark schema come from the parquet footers the writer just
+  produced (one driver-side metadata read per file). Only opted-in
+  ``stats_cols``/``bloom_cols`` pay an aggregation over the new
+  chunk. The recorded schema (``SCHEMA_KEY``) is handed to every
+  snapshot read whose chunks share it, so reads and rewrites skip
+  Spark's schema-inference and ``mergeSchema`` jobs too. At many
+  thousands of files per commit the footer reads want a thread pool
+  (or the write job's own task statistics); the manifest is the same.
 """
 
 from __future__ import annotations
@@ -49,6 +58,7 @@ import os
 import re
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .operators.upsert import merge_upsert
 
@@ -104,19 +114,71 @@ _BLOOM_K = 5               # ~0.1% FP at the 10-bits/row sizing; FPs
 DTYPES_KEY = "__dtypes__"
 
 # reserved key inside per-chunk stats entries holding the chunk's
-# parquet footer-schema fingerprint, recorded in the same write-time
-# pass that computes stats. The schema-grouped pruned read
-# (_read_pruned) groups chunks by this manifest entry instead of
-# re-opening a parquet footer per kept chunk per fresh table handle
-# (review r7: repeated driver I/O on many-chunk tables); footer reads
-# remain only as the fallback for manifests predating the key.
+# schema fingerprint: the Spark schema its parquet footers record,
+# made nullable as Spark's reader does, as canonical StructType JSON
+# (see _footer_fingerprint). Snapshot reads and rewrites whose chunks
+# all record the same schema pass it to the reader, skipping the
+# inference/mergeSchema job; the schema-grouped pruned read
+# (_read_pruned) groups chunks by it instead of re-opening a footer
+# per kept chunk per fresh table handle (review r7). Older manifests
+# hold pyarrow's schema text here, or no entry: those chunks take the
+# inference path, and _read_pruned falls back to a footer read.
 SCHEMA_KEY = "__schema__"
+
+# footer key-value entry where Spark's parquet writer records the
+# row schema it wrote (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 _RESERVED_STAT_KEYS = (ROWS_KEY, BLOOM_KEY, DTYPES_KEY, SCHEMA_KEY)
 
 
 def _vname(v: int) -> str:
     return f"v{v:0{_PAD}d}.json"
+
+
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable`` over schema JSON: every struct
+    field, array element and map value nullable, at every depth — what
+    a parquet read reports whatever nullability the writer had."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [{**f, "nullable": True,
+                                 "type": _as_nullable(f["type"])}
+                                for f in t["fields"]]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True,
+                "elementType": _as_nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _as_nullable(t["keyType"]),
+                "valueType": _as_nullable(t["valueType"])}
+    return t
+
+
+def _footer_fingerprint(meta) -> str:
+    """SCHEMA_KEY value for a chunk from one of its files' parquet
+    ``FileMetaData``: the Spark row schema the writer recorded, made
+    nullable, as canonical StructType JSON — exactly the schema a
+    ``spark.read.parquet`` of the chunk infers. A file without that
+    entry (not written by Spark) yields pyarrow's schema text, which
+    still groups chunks but is never handed to a reader."""
+    raw = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return meta.schema.to_arrow_schema().to_string()
+    return StructType.fromJson(_as_nullable(json.loads(raw))).json()
+
+
+def _fingerprint_schema(fp) -> StructType | None:
+    """The Spark schema a SCHEMA_KEY value records; None for a
+    missing entry or pyarrow's schema text (older manifests)."""
+    try:
+        d = json.loads(fp)
+    except (TypeError, ValueError):
+        return None
+    if not isinstance(d, dict) or d.get("type") != "struct":
+        return None
+    return StructType.fromJson(d)
 
 
 def _local_path(uri: str) -> str:
@@ -378,15 +440,29 @@ class CowTable:
             if bad:
                 raise ConstraintViolationError(f"{name}: {expr}", int(bad))
 
-    def _read_chunks(self, chunks: list[str]) -> DataFrame:
-        """Snapshot-REWRITE read: always mergeSchema, because a rewrite
-        (merge/delete/compact) REPLACES chunks — a plain multi-chunk
-        read infers the schema from one file's footer and can silently
-        drop a column only some chunks carry (additive evolution),
-        making the loss permanent. Plain snapshot READS keep
-        mergeSchema opt-in (:meth:`read`) since they can't lose data."""
-        return (self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(self.path, c) for c in chunks]))
+    def _read_chunks(self, chunks: list[str], man: dict,
+                     merge_schema: bool = True) -> DataFrame:
+        """Read ``chunks`` of manifest ``man``. When every chunk records
+        the same Spark schema (SCHEMA_KEY), the reader gets it
+        explicitly: the result is what inference would return, minus
+        the inference or mergeSchema job. Otherwise (an evolved table,
+        or a manifest predating Spark-schema fingerprints) the schema
+        is inferred, with mergeSchema when ``merge_schema`` — the
+        default, because a rewrite (merge/delete/compact) REPLACES
+        chunks, and a plain multi-chunk read infers one file's schema
+        and can silently drop a column only some chunks carry
+        (additive evolution), making the loss permanent."""
+        schema = None
+        fps = {man.get("stats", {}).get(c, {}).get(SCHEMA_KEY)
+               for c in chunks}
+        if len(fps) == 1:
+            schema = _fingerprint_schema(fps.pop())
+        r = self.spark.read
+        if schema is not None:
+            r = r.schema(schema)
+        elif merge_schema:
+            r = r.option("mergeSchema", "true")
+        return r.parquet(*[os.path.join(self.path, c) for c in chunks])
 
     # ------------------------------------------------------------ log
 
@@ -456,47 +532,60 @@ class CowTable:
                 for c in self.manifest(version)["chunks"]]
 
     def _chunk_stats(self, chunk: str) -> tuple[dict, dict]:
-        """(chunk_stats, file_stats) for a just-written chunk: ONE
-        per-file aggregation over its contents — ``file_stats`` maps
-        each data file to {col: [min, max]}, and the chunk-level range
-        is folded from the file ranges driver-side. (A production
-        writer reads these from the parquet footers it just wrote,
-        paying nothing extra; the manifest protocol is identical.)"""
-        df = self.spark.read.parquet(os.path.join(self.path, chunk))
-        cols = [c for c in self.stats_cols if c in df.columns]
-        # per-file row counts ride the same aggregation (integrity
-        # audits via verify(); Delta-export numRecords) — recorded
-        # even for tables with no stats columns
-        aggs = [F.count(F.lit(1)).alias("__nr")]
-        for c in cols:
-            aggs += [F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}")]
-        rows = (df.withColumn("_f", F.input_file_name())
-                .groupBy("_f").agg(*aggs).collect())
+        """(chunk_stats, file_stats) for a just-written chunk. The
+        parquet footers the writer just produced give, with no Spark
+        job, each file's row count (integrity audits via verify();
+        Delta-export numRecords) and the chunk's schema fingerprint
+        (SCHEMA_KEY) — recorded for every table. Opted-in
+        ``stats_cols`` add ONE per-file aggregation over the chunk —
+        ``file_stats`` maps each data file to {col: [min, max]}, and
+        the chunk-level range is folded from the file ranges
+        driver-side — and ``bloom_cols`` one per column."""
+        import pyarrow.parquet as pq
+
         cdir = os.path.join(self.path, chunk)
-        fstats: dict[str, dict] = {}
-        for r in rows:
-            # key by chunk-relative path (not basename): nested layouts
-            # would collide basenames across subdirectories
-            fname = os.path.relpath(_local_path(r["_f"]), cdir)
-            fstats[fname] = {
-                c: [_js(r[f"lo_{c}"]), _js(r[f"hi_{c}"])] for c in cols
-            }
-            fstats[fname][ROWS_KEY] = int(r["__nr"])
-        # ZERO-row part files never group under input_file_name, but
-        # the writer does emit them (task 0 of a write whose split had
-        # every row filtered away — routine under real cluster read
+        # EVERY data file is manifest-accounted, including the ZERO-row
+        # part files the writer emits (task 0 of a write whose split
+        # had every row filtered away — routine under real cluster read
         # geometry; the round-8 partition sweep caught verify() blind
-        # to their deletion). Walk the just-written dir so EVERY data
-        # file is manifest-accounted: rows=0, ranges unknowable.
+        # to their deletion). Keys are chunk-relative paths (not
+        # basenames): nested layouts would collide basenames.
+        fstats: dict[str, dict] = {}
+        fingerprint = ""
         for dirpath, _dirs, files in os.walk(cdir):
-            for f in files:
+            for f in sorted(files):
                 if not f.endswith(".parquet"):
                     continue
-                rel = os.path.relpath(os.path.join(dirpath, f), cdir)
-                if rel not in fstats:
-                    fstats[rel] = {c: [None, None] for c in cols}
-                    fstats[rel][ROWS_KEY] = 0
-        cstats = {}
+                full = os.path.join(dirpath, f)
+                meta = pq.read_metadata(full)
+                fstats[os.path.relpath(full, cdir)] = {
+                    ROWS_KEY: meta.num_rows}
+                # files within a chunk share a schema (a chunk is one
+                # write job's output)
+                fingerprint = fingerprint or _footer_fingerprint(meta)
+        # footer-schema fingerprint, so reads pass the schema and
+        # pruned scans group chunks without re-reading footers
+        cstats = {SCHEMA_KEY: fingerprint}
+        stats_cols = self.stats_cols
+        if not (stats_cols or self.bloom_cols):
+            return cstats, fstats
+        df = self._read_chunks([chunk], {"stats": {chunk: cstats}})
+        cols = [c for c in stats_cols if c in df.columns]
+        for s in fstats.values():
+            # zero-row files never group under input_file_name below:
+            # their ranges stay unknowable
+            s.update({c: [None, None] for c in cols})
+        if cols:
+            aggs = []
+            for c in cols:
+                aggs += [F.min(c).alias(f"lo_{c}"),
+                         F.max(c).alias(f"hi_{c}")]
+            for r in (df.withColumn("_f", F.input_file_name())
+                      .groupBy("_f").agg(*aggs).collect()):
+                fname = os.path.relpath(_local_path(r["_f"]), cdir)
+                fstats[fname].update({
+                    c: [_js(r[f"lo_{c}"]), _js(r[f"hi_{c}"])]
+                    for c in cols})
         dtypes = dict(df.dtypes)
         for c in cols:
             # the date-padding fold key applies only to genuinely
@@ -508,19 +597,15 @@ class CowTable:
             if los and his:
                 cstats[c] = [min(los, key=lambda v: _prune_key(v, tmp)),
                              max(his, key=lambda v: _prune_key(v, tmp))]
-        if cstats:
-            # record the writer's dtype per stats column so the scan
-            # side can gate date-padding on the COLUMN type, not the
-            # probe bound's Python type (see DTYPES_KEY). cols is
-            # filtered to df.columns, so dtypes always has an entry —
-            # no "" fallback, which _stat_temporal would otherwise
-            # have to treat as missing (review r7)
-            cstats[DTYPES_KEY] = {c: dtypes[c] for c in cols
-                                  if c in cstats}
-        # footer-schema fingerprint, so pruned scans group chunks
-        # without re-reading parquet footers (see SCHEMA_KEY) —
-        # recorded even for stats-less tables
-        cstats[SCHEMA_KEY] = self._dir_footer_schema(cdir)
+        # record the writer's dtype per stats column so the scan side
+        # can gate date-padding on the COLUMN type, not the probe
+        # bound's Python type (see DTYPES_KEY). cols is filtered to
+        # df.columns, so dtypes always has an entry — no "" fallback,
+        # which _stat_temporal would otherwise have to treat as
+        # missing (review r7)
+        ranged = {c: dtypes[c] for c in cols if c in cstats}
+        if ranged:
+            cstats[DTYPES_KEY] = ranged
         self._attach_blooms(df, cdir, fstats)
         return cstats, fstats
 
@@ -705,15 +790,15 @@ class CowTable:
         (newest when None) — a reader holding a manifest is isolated
         from every later commit.
 
-        ``merge_schema=True`` unions the chunk schemas by name (Delta's
-        schema-evolution read): a column added by a later append comes
-        back null-filled for pre-evolution chunks. Off by default —
-        schema merging reads every chunk's footer, so fixed-schema
-        tables shouldn't pay for it."""
-        r = self.spark.read
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        return r.parquet(*self.chunk_paths(version))
+        A snapshot whose chunks all record one schema reads with it
+        and runs no schema job. Otherwise ``merge_schema=True`` unions
+        the chunk schemas by name (Delta's schema-evolution read): a
+        column added by a later append comes back null-filled for
+        pre-evolution chunks. Off by default — schema merging reads
+        every chunk's footer in a Spark job, and a plain read cannot
+        lose data that is still on storage."""
+        man = self.manifest(version)
+        return self._read_chunks(man["chunks"], man, merge_schema)
 
     def pruned_chunks(self, col: str, lo, hi,
                       version: int | None = None) -> list[str]:
@@ -869,7 +954,8 @@ class CowTable:
         files = sorted(_glob.glob(
             os.path.join(_glob.escape(chunk_dir), "**", "*.parquet"),
             recursive=True))
-        return pq.read_schema(files[0]).to_string() if files else ""
+        return _footer_fingerprint(pq.read_metadata(files[0])) \
+            if files else ""
 
     def _footer_schema(self, chunk_dir: str,
                        stats: dict | None = None) -> str:
@@ -906,14 +992,21 @@ class CowTable:
         overwhelmingly common single-schema case collapses to the one
         multi-path read — identical plan, zero extra I/O (fingerprints
         come from the manifest the writer recorded; a parquet footer
-        is opened only for pre-SCHEMA_KEY manifests)."""
+        is opened only for pre-SCHEMA_KEY manifests). A group whose
+        fingerprint is a Spark schema reads with it, running no
+        inference job."""
         version = version if version is not None else self.version()
         stats = self.manifest(version).get("stats", {})
         groups: dict[str, list[str]] = {}
         for p in paths:
             cdir = p if os.path.isdir(p) else os.path.dirname(p)
             groups.setdefault(self._footer_schema(cdir, stats), []).append(p)
-        reads = [self.spark.read.parquet(*g) for g in groups.values()]
+        reads = []
+        for fp, g in groups.items():
+            schema = _fingerprint_schema(fp)
+            r = self.spark.read if schema is None \
+                else self.spark.read.schema(schema)
+            reads.append(r.parquet(*g))
         df = reads[0]
         for r in reads[1:]:
             df = df.unionByName(r, allowMissingColumns=True)
@@ -973,16 +1066,16 @@ class CowTable:
         man_from = self.manifest(v_from)
         old, new = set(man_from["chunks"]), set(man_to["chunks"])
 
-        def rd(chunks: list[str]) -> DataFrame:
+        def rd(chunks: list[str], man: dict) -> DataFrame:
             if not chunks:
                 return self.read(v_from).limit(0)
-            # mergeSchema: a diff spanning a schema-evolution boundary
-            # must surface every column (a plain multi-chunk read can
-            # silently drop a column only some chunks carry)
-            return (self.spark.read.option("mergeSchema", "true")
-                    .parquet(*[os.path.join(self.path, c) for c in chunks]))
+            # the rewrite read: a diff spanning a schema-evolution
+            # boundary must surface every column (a plain multi-chunk
+            # read can silently drop a column only some chunks carry)
+            return self._read_chunks(chunks, man)
 
-        added, removed = rd(sorted(new - old)), rd(sorted(old - new))
+        added = rd(sorted(new - old), man_to)
+        removed = rd(sorted(old - new), man_from)
         # column-align the two sides before exceptAll (which requires
         # identical width): a column present on one side only — the
         # schema-evolution case — is null-filled on the other, exactly
@@ -1170,7 +1263,7 @@ class CowTable:
         keys = [key] if isinstance(key, str) else list(key)
         self._enforce(updates)  # only the incoming rows re-validate
         man = self.manifest()
-        base = (self._read_chunks(man["chunks"])
+        base = (self._read_chunks(man["chunks"], man)
                 .withColumn("_file", F.input_file_name()))
         ukeys = updates.select(*keys).distinct()
         matched = base.join(
@@ -1179,7 +1272,7 @@ class CowTable:
         touched = self._touched_chunks(matched, man)
         untouched = [c for c in man["chunks"] if c not in touched]
         to_rewrite = (
-            self._read_chunks(touched)
+            self._read_chunks(touched, man)
             if touched else base.drop("_file").limit(0)
         )
         merged = merge_upsert(to_rewrite, updates, keys,
@@ -1201,7 +1294,7 @@ class CowTable:
         evaluates to NULL (e.g. a null column), losing rows that no
         DELETE statement would touch."""
         man = self.manifest()
-        base = (self._read_chunks(man["chunks"])
+        base = (self._read_chunks(man["chunks"], man)
                 .withColumn("_file", F.input_file_name()))
         touched = self._touched_chunks(base.filter(cond), man)
         untouched = [c for c in man["chunks"] if c not in touched]
@@ -1210,7 +1303,7 @@ class CowTable:
         fstats = self._carry_stats(untouched, man, "file_stats")
         if touched:
             keep = (
-                self._read_chunks(touched)
+                self._read_chunks(touched, man)
                 .filter(cond.isNull() | ~cond)
             )
             chunk = self._write_chunk(keep, "delete")
@@ -1255,7 +1348,7 @@ class CowTable:
         if zorder_layout not in ("sampled", "persist"):
             raise ValueError(f"unknown zorder_layout {zorder_layout!r}")
         man = self.manifest()
-        df = self._read_chunks(man["chunks"])
+        df = self._read_chunks(man["chunks"], man)
         cached = None
         if sort_by:
             df = (df.repartitionByRange(n_files, *sort_by)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_automation_spark.pipelines.datagen import (
@@ -70,6 +71,83 @@ def test_ledger_roundtrip_and_topk(spark, tmp_path):
     top2 = led.last_checks(2).collect()
     assert [r["checktime"].minute for r in top2] == [2, 1]
     assert [r["is_apply"] for r in top2] == [1, 0]
+
+
+def _ledger_rows(led):
+    return sorted(map(tuple, led.read().collect()))
+
+
+def test_ledger_record_runs_no_spark_job(spark, tmp_path):
+    """An append is a driver-side pyarrow file published with the
+    create-if-absent step: zero Spark jobs, and no staging file left
+    in the ledger directory."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"ledger_{uuid.uuid4().hex}"
+    led = Ledger(spark, str(tmp_path / "ledger"))
+    sc.setJobGroup(group, "ledger append", False)
+    try:
+        for ok in (True, False, True):
+            led.record("/mnt/landing", ok)
+    finally:
+        sc.setJobGroup("", "", False)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    names = os.listdir(tmp_path / "ledger")
+    assert len(names) == 3 and all(n.endswith(".parquet") for n in names)
+    assert not [n for n in names if n.startswith(".tmp-")]
+    assert [r.is_apply for r in led.read().orderBy("is_apply").collect()] \
+        == [0, 1, 1]
+
+
+def test_ledger_rows_match_spark_written_rows(spark, tmp_path):
+    """The pyarrow writer stores the rows the old Spark writer stored
+    (``createDataFrame(row, Ledger.SCHEMA).write``) — the same
+    checktime instant for a naive and for a tz-aware ``when`` — and a
+    directory mixing files from both writers reads as one ledger."""
+    import datetime as dt
+
+    whens = [dt.datetime(2024, 3, 1, 10, 30, 15, 250),
+             dt.datetime(2024, 3, 1, 19, 30, tzinfo=dt.timezone(
+                 dt.timedelta(hours=9)))]
+    new = Ledger(spark, str(tmp_path / "new"))
+    old = Ledger(spark, str(tmp_path / "old"))
+    for i, when in enumerate(whens):
+        new.record(f"/mnt/{i}", i == 0, when=when)
+        spark.createDataFrame([(f"/mnt/{i}", int(i == 0), when)],
+                              Ledger.SCHEMA) \
+            .write.mode("append").parquet(old.path)
+    assert _ledger_rows(new) == _ledger_rows(old)
+    # same instants, not just the same wall-clock rendering
+    instants = new.read().select(F.unix_micros("checktime")).collect()
+    assert sorted(r[0] for r in instants) == sorted(
+        int(w.timestamp() * 1_000_000) for w in whens)
+
+    # one directory, both writers' files
+    mixed = Ledger(spark, old.path)
+    mixed.record("/mnt/2", True, when=dt.datetime(2024, 3, 2))
+    rows = _ledger_rows(mixed)
+    assert len(rows) == 3
+    assert [r.checktime.day for r in mixed.last_checks(1).collect()] == [2]
+    assert not [n for n in os.listdir(old.path) if n.startswith(".tmp-")]
+
+
+def test_run_available_raises_on_timeout_then_resumes(spark, tmp_path):
+    """A run that cannot drain in time must not return as if the landed
+    set were loaded: it raises TimeoutError after stopping the query,
+    and the next run still loads every row exactly once."""
+    import pytest
+
+    landing, table_dir = str(tmp_path / "landing"), str(tmp_path / "table")
+    batch = generate_survey(spark, 400, seed=11)
+    write_survey_csv(batch, landing, stamp="datagen_t0")
+    pipe = IngestPipeline(spark, landing, table_dir, str(tmp_path / "ckpt"))
+    with pytest.raises(TimeoutError):
+        pipe.run_available(timeout_s=0.001)
+    pipe.run_available()
+    cols = batch.columns
+    got = sorted(map(tuple, pipe.table().select(*cols).collect()))
+    assert got == sorted(map(tuple, batch.collect()))
 
 
 def test_retention_sweep(tmp_path):

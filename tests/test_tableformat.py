@@ -1188,3 +1188,194 @@ def test_log_seam_no_python_os_call_touches_log_dir(
     assert len(rows) == 30
     assert {r["_change_type"] for r in rows} == {"insert"}
     assert all(r["_commit_timestamp"] is not None for r in rows)
+
+
+# ------------------------------------- footer-derived commit metadata
+
+def _jobs(spark, fn):
+    """(exact Spark job count, result) of ``fn()`` under its own job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"tf_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin", False)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "", False)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _outcome(fn):
+    """Rows of ``fn()`` as a sorted list, or the error class it
+    raised — what "reads exactly as today" compares."""
+    try:
+        return sorted(map(tuple, fn().collect()))
+    except Exception as e:  # noqa: BLE001
+        return type(e).__name__
+
+
+def test_read_schema_equals_inferred_schema(spark, tmp_path):
+    """read() passes the manifest-recorded schema instead of inferring
+    one, so it must be exactly the schema a plain parquet read of the
+    same chunks infers — nullability, nested fields and temporal,
+    decimal and NTZ types included."""
+    import datetime as dt
+    import decimal
+
+    from lakehouse_automation_spark.pipelines.datagen import generate_survey
+    from lakehouse_automation_spark.tableformat import (
+        SCHEMA_KEY, _fingerprint_schema)
+
+    survey = CowTable.create(spark, generate_survey(spark, 300, seed=4),
+                             str(tmp_path / "s"))
+    survey.append(generate_survey(spark, 50, seed=5))
+
+    typed = spark.createDataFrame(
+        [(1, dt.date(2024, 1, 2), dt.datetime(2024, 1, 2, 3, 4, 5),
+          decimal.Decimal("12.25"), (7, "x"), [1, None], {"a": 1})],
+        "k int not null, d date, ts timestamp, amt decimal(12,2), "
+        "s struct<x: int not null, y: string>, arr array<int>, "
+        "m map<string, int>",
+    ).withColumn("ntz", F.lit(dt.datetime(2024, 5, 6, 7, 8))
+                 .cast("timestamp_ntz"))
+    wide = CowTable.create(spark, typed, str(tmp_path / "w"),
+                           stats_cols=["d", "ts"])
+    wide.merge(typed.withColumn("amt", F.lit(decimal.Decimal("1.50"))
+                                .cast("decimal(12,2)")), "k")
+    for tbl in (survey, wide):
+        inferred = spark.read.parquet(*tbl.chunk_paths()).schema
+        assert tbl.read().schema == inferred
+        assert tbl.read(merge_schema=True).schema == inferred
+        # the manifest entry itself is that schema
+        for s in tbl.manifest()["stats"].values():
+            assert _fingerprint_schema(s[SCHEMA_KEY]) == inferred
+    got = wide.read().collect()
+    assert [(r.k, r.amt, r.s.x, r.ntz) for r in got] == [
+        (1, decimal.Decimal("1.50"), 7, dt.datetime(2024, 5, 6, 7, 8))]
+
+
+def test_evolved_tables_read_as_before(spark, tmp_path):
+    """Chunks recording DIFFERENT schemas keep the inference and
+    mergeSchema path: an additive evolution and an int -> bigint
+    append read, rewrite and prune-scan exactly as a plain parquet
+    read of the same chunks does."""
+    def additive(p):
+        t = CowTable.create(
+            spark, spark.range(10).select(F.col("id").alias("k"),
+                                          F.col("id").alias("v")),
+            p, stats_cols=["k"])
+        t.append(spark.range(10, 20).select(
+            F.col("id").alias("k"), F.col("id").alias("v"),
+            F.lit("e").alias("extra")))
+        return t
+
+    def widened(p):
+        t = CowTable.create(
+            spark, spark.range(10).select(F.col("id").cast("int")
+                                          .alias("k"),
+                                          F.lit("s").alias("v")),
+            p, stats_cols=["k"])
+        t.append(spark.range(5, 20).select(F.col("id").alias("k"),
+                                           F.lit("b").alias("v")))
+        return t
+
+    for build in (additive, widened):
+        tbl = build(str(tmp_path / build.__name__))
+        paths = tbl.chunk_paths()
+        merged = spark.read.option("mergeSchema", "true")
+        assert _outcome(tbl.read) == _outcome(
+            lambda: spark.read.parquet(*paths))
+        assert _outcome(lambda: tbl.read(merge_schema=True)) == \
+            _outcome(lambda: merged.parquet(*paths))
+        # k in [3, 12]: 7 + 3 rows additive, 7 + 8 rows widened
+        got = (tbl._read_pruned(tbl.pruned_files("k", 3, 12))
+               .filter(F.col("k").between(3, 12)))
+        assert got.count() == (15 if build is widened else 10)
+        assert got.schema["k"].dataType.typeName() == "long"
+
+    # additive: the rewrite carries the evolved column
+    a = additive(str(tmp_path / "a2"))
+    a.merge(spark.range(3).select(F.col("id").alias("k"),
+                                  F.lit(99).cast("long").alias("v")), "k")
+    rows = {r.k: (r.v, r.extra) for r in a.read(merge_schema=True)
+            .collect()}
+    assert len(rows) == 20 and rows[0] == (99, None) \
+        and rows[15] == (15, "e")
+    # int -> bigint: mergeSchema cannot reconcile INT and BIGINT, so
+    # the rewrite fails as it always has, and the tip does not move
+    w = widened(str(tmp_path / "w2"))
+    with pytest.raises(Exception) as err:
+        w.merge(spark.range(3).select(F.col("id").alias("k"),
+                                      F.lit("u").alias("v")), "k")
+    assert type(err.value).__name__ == _outcome(
+        lambda: spark.read.option("mergeSchema", "true")
+        .parquet(*w.chunk_paths()))
+    assert w.version() == 1
+
+
+def test_legacy_pyarrow_schema_fingerprint_still_reads(spark, tmp_path):
+    """Manifests written before SCHEMA_KEY held a Spark schema carry
+    pyarrow's schema text there: reads and rewrites of those chunks
+    must fall back to inference (the text is not a Spark schema)."""
+    import pyarrow.parquet as pq
+
+    from lakehouse_automation_spark.tableformat import SCHEMA_KEY, _vname
+
+    tbl = CowTable.create(spark, _df(spark, [(1, "a", 10), (2, "b", 20)]),
+                          str(tmp_path / "t"), stats_cols=["k"])
+    vfile = os.path.join(tbl._log_dir(), _vname(0))
+    man = json.load(open(vfile))
+    for c, s in man["stats"].items():
+        first = sorted(f for f in os.listdir(os.path.join(tbl.path, c))
+                       if f.endswith(".parquet"))[0]
+        s[SCHEMA_KEY] = pq.read_schema(
+            os.path.join(tbl.path, c, first)).to_string()
+    json.dump(man, open(vfile, "w"))
+    legacy = CowTable(spark, str(tmp_path / "t"))
+    assert sorted(r.k for r in legacy.read().collect()) == [1, 2]
+    assert legacy.scan("k", 2, 2).count() == 1
+    legacy.merge(_df(spark, [(2, "b", 21), (3, "c", 30)]), "k")
+    assert sorted((r.k, r.val) for r in legacy.read().collect()) == [
+        (1, 10), (2, 21), (3, 30)]
+
+
+def test_refresh_ops_run_only_data_moving_jobs(spark, tmp_path):
+    """Commit metadata comes from the written footers and snapshot
+    reads pass the recorded schema, so each op runs only the jobs
+    that move data (Spark 4.1, AQE on): create = the write; merge =
+    touched-chunk detection (2) + the rewrite (3); compact = the
+    rewrite (2); read().collect() = the scan. A schema-inference,
+    mergeSchema or row-count job creeping back breaks these pins."""
+    def batch(lo, hi):
+        return spark.range(lo, hi).select(F.col("id").alias("k"),
+                                          (F.col("id") % 7).alias("v"))
+
+    path = str(tmp_path / "t")
+    n, tbl = _jobs(spark, lambda: CowTable.create(spark, batch(0, 100),
+                                                  path))
+    assert n == 1
+    assert _jobs(spark, lambda: tbl.merge(batch(50, 150), "k"))[0] == 5
+    assert _jobs(spark, tbl.compact)[0] == 2
+    n, rows = _jobs(spark, lambda: tbl.read().collect())
+    assert n == 1 and len(rows) == 150
+    assert tbl.verify()["ok"]
+
+
+def test_footer_row_counts_include_empty_part_files(spark, tmp_path):
+    """Per-file row counts come from the footers, so the zero-row part
+    files Spark's writer emits are recorded with 0 rows, and every
+    recorded count matches the data."""
+    from lakehouse_automation_spark.tableformat import ROWS_KEY
+
+    # split 0 (ids 0-9) is filtered empty, yet its task still writes a
+    # file; splits 1-2 write none
+    df = spark.range(0, 40, 1, 4).filter(F.col("id") >= 30)
+    tbl = CowTable.create(spark, df, str(tmp_path / "t"))
+    (fstats,) = tbl.manifest()["file_stats"].values()
+    assert sorted(s[ROWS_KEY] for s in fstats.values()) == [0, 10]
+    files = [f for f in os.listdir(tbl.chunk_paths()[0])
+             if f.endswith(".parquet")]
+    assert len(fstats) == len(files)
+    assert tbl.verify()["ok"]
