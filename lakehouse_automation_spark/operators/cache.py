@@ -30,6 +30,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from .pathio import listing_signature
+
 _PERSISTED: list[DataFrame] = []
 _KEYED: dict[tuple, DataFrame] = {}
 _SCALARS: dict[tuple, object] = {}
@@ -37,21 +39,26 @@ _SCALARS: dict[tuple, object] = {}
 
 def plan_key(df: DataFrame) -> tuple:
     """Memoization key for a keyed persist. ``semanticHash`` alone is a
-    32-bit plan hash — two different corpora (or a rewritten file
-    behind an identical-looking plan) could collide and silently serve
-    the wrong cached table. Pair it with the analyzed plan string,
-    which names the concrete input paths, so aliasing requires a
-    same-plan same-path collision. Expression ids (``#123``) are
-    stripped first: they are allocated fresh for every plan BUILD, so
-    leaving them in turns every repeat invocation into a cache miss
-    (measured: the two LSH bench keys doubled when the raw string went
-    into the key)."""
+    32-bit plan hash — two different corpora could collide and silently
+    serve the wrong cached table. Pair it with the analyzed plan
+    string, which names the concrete input paths, and with the
+    :func:`~.pathio.listing_signature` of the plan's input files
+    (``df.inputFiles()`` reads the plan's file index: no Spark job), so
+    files rewritten behind an unchanged path change the key. Expression
+    ids (``#123``) are stripped first: they are allocated fresh for
+    every plan BUILD, so leaving them in turns every repeat invocation
+    into a cache miss (measured: the two LSH bench keys doubled when
+    the raw string went into the key)."""
     try:
         plan = re.sub(r"#\d+", "#",
                       df._jdf.queryExecution().analyzed().toString())
     except Exception:  # Connect or API drift: fall back to schema
         plan = df.schema.json()
-    return (df.semanticHash(), plan)
+    try:
+        sig = listing_signature(df.inputFiles())
+    except Exception:  # noqa: BLE001 — no stamp, as for object stores
+        sig = None
+    return (df.semanticHash(), plan, sig)
 
 
 def memo_scalar(key: tuple, compute: Callable[[], object]) -> object:
@@ -63,13 +70,16 @@ def memo_scalar(key: tuple, compute: Callable[[], object]) -> object:
     full corpus scan that ``tracked_persist_keyed`` alone cannot dedupe
     — the r14 forced-blocklocal path paid it on every invocation.
 
-    Staleness contract (ADVICE r16): a memoized scalar reflects the
-    corpus AS OF the first computation in the current lifecycle. A
-    library caller that REWRITES the files behind the same input path
-    mid-lifecycle must call :func:`release_persisted` first (exactly
-    as it must for the keyed persists, whose plan keys have the same
-    same-plan-same-path blind spot); the harnesses here release
-    between keys and — since r17 — between timed bench runs."""
+    Staleness contract: keyed by :func:`plan_key`, a memoized scalar
+    (like a keyed persist) misses once the local files behind the
+    plan's input paths change — a new file, size, mtime or inode — so
+    a library caller that rewrites them mid-lifecycle gets a fresh
+    value without calling :func:`release_persisted`. What the stamp
+    cannot see still needs that call: inputs on a non-local scheme
+    (``s3a://``, ``hdfs://``), inputs read through a persisted subtree
+    (``inputFiles`` stops at the cache), and an in-place rewrite that
+    keeps size, mtime and inode. The harnesses here release between
+    keys and between timed bench runs."""
     if key in _SCALARS:
         return _SCALARS[key]
     val = compute()
@@ -109,7 +119,15 @@ def release_persisted(blocking: bool = True) -> int:
     too). Blocking by default so the cleanup cost lands HERE, not
     smeared into whatever the caller times next (async unpersist
     measurably polluted neighboring bench keys). Safe to call at any
-    time; plans that re-execute later simply recompute."""
+    time; plans that re-execute later simply recompute.
+
+    The catalog's schema memo (``engine.catalog.read_parquet``) is
+    deliberately NOT released here: it is catalog metadata, not
+    per-query build state, and it needs no release, because its key
+    changes whenever the inference confs or the files do (any file
+    added or removed, or a new size, mtime or inode). Releasing it
+    would only put a schema-inference job back into the next read of
+    every table."""
     n = len(_SCALARS)
     for df in _PERSISTED:
         try:

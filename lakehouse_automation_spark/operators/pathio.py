@@ -29,6 +29,11 @@ them):
   delete best-effort).
 - ``listdir`` of a missing directory is ``[]``, not an error.
 
+:func:`listing_signature` is the one driver-side stamp of a path's
+file set (what Spark's file index lists, with size, mtime and inode):
+the catalog's schema memo and ``operators.cache.plan_key`` both key on
+it, so neither keeps a copy.
+
 One rename caveat worth naming: HDFS renames are atomic; S3A's are
 copy+delete (not atomic). The compact protocol tolerates that — the
 crash-recovery replay restores from the surviving scratch copy — but
@@ -41,6 +46,7 @@ from __future__ import annotations
 import glob as _glob
 import os as _os
 import shutil as _shutil
+import stat as _stat
 
 
 class LocalPathIO:
@@ -393,6 +399,53 @@ def pathio_for(spark, path: str):
             f"(resolution failed: {e}); the data path may still work "
             f"through Spark, but the maintenance swap will not run "
             f"half-local") from e
+
+
+def _spark_lists(name: str) -> bool:
+    """Spark's file-index name filter (``shouldFilterOutPathName``):
+    names starting with ``.``, or with ``_`` unless they hold ``=`` (a
+    partition directory), and names ending ``._COPYING_`` are hidden;
+    parquet's ``_metadata``/``_common_metadata`` summaries are not."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return True
+    return not ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def listing_signature(paths) -> tuple | None:
+    """Version stamp of the files behind ``paths``: the sorted
+    ``(path, size, mtime_ns, inode)`` of every file Spark's file index
+    lists under each path (directories walked recursively, hidden
+    names skipped as Spark skips them), taken with ``os.stat`` — no
+    Spark job, no file opened. A rewrite through a new file, a new
+    size or a new mtime changes it; an in-place rewrite that keeps
+    size, mtime and inode does not.
+
+    ``None`` means "cannot tell": a non-local scheme (an object-store
+    listing on every call is the cost a stamp must not add), a glob
+    (Spark's ``isGlobPath`` characters), a missing path, or a file
+    that vanished mid-walk. Callers fall back to what they did
+    without a stamp."""
+    out = []
+    for p in paths:
+        if _scheme(p) not in (None, "file") or any(c in "{}[]*?\\" for c in p):
+            return None
+        try:
+            root = LocalPathIO._strip(p)
+            st = _os.stat(root)
+            if not _stat.S_ISDIR(st.st_mode):
+                out.append((root, st.st_size, st.st_mtime_ns, st.st_ino))
+                continue
+            for d, dirs, files in _os.walk(root):
+                dirs[:] = [n for n in dirs if _spark_lists(n)]
+                for n in files:
+                    if _spark_lists(n):
+                        f = _os.path.join(d, n)
+                        st = _os.stat(f)
+                        out.append((f, st.st_size, st.st_mtime_ns, st.st_ino))
+        except (OSError, ValueError):
+            return None
+    return tuple(sorted(out))
 
 
 def replay_interrupted_swap(io, path: str, scratch: str) -> int:

@@ -7,7 +7,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..engine.catalog import table
+from ..engine.catalog import read_parquet, table
 
 # ---------------------------------------------------------------- registry
 
@@ -72,7 +72,7 @@ def bounded_file_ingest(spark: SparkSession, sf_dir: str,
     import tempfile
 
     path = os.path.join(sf_dir, glob)
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     scratch = tempfile.mkdtemp(prefix="las_ingest_")
     out_dir = os.path.join(scratch, "out")
     done = False
@@ -95,7 +95,7 @@ def bounded_file_ingest(spark: SparkSession, sf_dir: str,
     if done and os.path.isdir(out_dir):
         return (spark.read.schema(schema)
                 .option("recursiveFileLookup", "true").parquet(out_dir))
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # ------------------------------------------------------- determinism helpers

@@ -21,6 +21,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.catalog import read_parquet
 from ..tableformat import CowTable
 from .base import register, t
 from ..operators.plancapture import capture_plan
@@ -378,7 +379,7 @@ def tf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     root = _tmp()
     state: dict = {"tbl": None}
 
@@ -409,7 +410,7 @@ def tf_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # would report as data corruption instead of a stream
             # wedge — rebuild deterministically from the batch path.
             state["tbl"] = CowTable.create(
-                spark, spark.read.parquet(path), f"{root}/events_batch")
+                spark, read_parquet(spark, path), f"{root}/events_batch")
         return (
             state["tbl"].read()
             .agg(F.count(F.lit(1)).alias("n_rows"),

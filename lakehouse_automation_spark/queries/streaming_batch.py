@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine.catalog import read_parquet
 from .base import register, t
 
 
@@ -216,7 +217,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     path = os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     state = {"batches": 0, "rows": 0}
 
     def sink(batch_df, batch_id):
@@ -241,7 +242,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     if state["batches"] == 0:
         # stream could not run here — batch fallback keeps the key total
         state["batches"] = 1
-        state["rows"] = spark.read.parquet(path).count()
+        state["rows"] = read_parquet(spark, path).count()
     return spark.createDataFrame(
         [(state["batches"], state["rows"])], "ledger_rows bigint, loaded_rows bigint"
     )
