@@ -51,8 +51,8 @@ def scratch_base() -> str:
 
 
 def _extra_confs() -> dict[str, str]:
-    """$SPARK_GRAFT_EXTRA_CONFS as ``k=v;k=v`` — the robustness sweeps
-    (tools/partition_check.py) use this to rerun the whole gate under
+    """$SPARK_GRAFT_EXTRA_CONFS as ``k=v;k=v`` — the sweep profiles
+    (tools/sweep.py --profile) use this to rerun the whole gate under
     adversarial parallelism (prime shuffle-partition counts, tiny input
     splits, AQE off) without per-query plumbing. Applied LAST, so a
     sweep can override any RUNTIME_CONFS entry."""
@@ -171,6 +171,41 @@ def delta_available() -> bool:
 
 _delta_logged = False
 
+#: Heap ceiling whatever the machine: the old fixed default.
+MAX_DRIVER_MB = 48 * 1024
+#: Share of physical memory the default heap takes, so that two gate
+#: processes (a sweep beside a test run) fit on one host together.
+DRIVER_MEM_SHARE = 0.4
+
+_UNITS = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def memory_mb(spec: str) -> int:
+    """A ``spark.driver.memory`` value (an integer with an optional
+    k/m/g/t suffix, as -Xmx takes it; a bare number is MiB) in MiB."""
+    s = spec.strip().lower()
+    if s[-1:] in _UNITS:
+        return int(int(s[:-1]) * _UNITS[s[-1]])
+    return int(s)
+
+
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: $SPARK_DRIVER_MEM verbatim, else
+    DRIVER_MEM_SHARE of ``MemTotal`` capped at MAX_DRIVER_MB (the cap
+    also when the machine's memory cannot be read). A heap larger than
+    the machine never fails at start-up; it fails later, when the
+    collector lets the heap grow past what the host can back."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(int(line.split()[1]) for line in fh
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MB}m"
+    return f"{min(MAX_DRIVER_MB, int(total_kb / 1024 * DRIVER_MEM_SHARE))}m"
+
 
 def get_spark(app_name: str = "lakehouse_automation_spark",
               cpus: int | str | None = None) -> SparkSession:
@@ -178,17 +213,21 @@ def get_spark(app_name: str = "lakehouse_automation_spark",
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. In local mode
     the driver JVM is the only process, so driver memory is the single
-    memory knob.
+    memory knob: see :func:`driver_memory`. ``maxResultSize`` stays at
+    half the heap (at most 8g), so an oversized collect fails as a
+    Spark error instead of an out-of-memory driver.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     n = (os.cpu_count() or 8) if cpus == "*" else int(cpus)
+    heap = driver_memory()
+    heap_mb = memory_mb(heap)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.default.parallelism", str(n))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
-        .config("spark.driver.maxResultSize", "8g")
+        .config("spark.driver.memory", heap)
+        .config("spark.driver.maxResultSize", f"{min(8192, heap_mb // 2)}m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # managed tables (bucketed join copies, ANALYZE stats copies)

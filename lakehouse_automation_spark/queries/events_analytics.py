@@ -303,11 +303,12 @@ def sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
              (SELECT COUNT(*) FROM p) AS n3
     )
     SELECT 'view' AS stage, n1 AS n_users,
-           CAST(n1 AS DOUBLE) / n1 AS pct_of_entry FROM n
+           CAST(n1 AS DOUBLE) / NULLIF(n1, 0) AS pct_of_entry FROM n
     UNION ALL
-    SELECT 'view>click', n2, CAST(n2 AS DOUBLE) / n1 FROM n
+    SELECT 'view>click', n2, CAST(n2 AS DOUBLE) / NULLIF(n1, 0) FROM n
     UNION ALL
-    SELECT 'view>click>purchase', n3, CAST(n3 AS DOUBLE) / n1 FROM n
+    SELECT 'view>click>purchase', n3, CAST(n3 AS DOUBLE) / NULLIF(n1, 0)
+    FROM n
     """,
 )
 def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,7 +318,8 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a window min, c_ts a window min over click events conditioned on
     v_ts, p_ts likewise over c_ts (each references the previous window
     column, so the specs chain within a single Exchange). The final
-    3-row stage table is driver-size by construction."""
+    3-row stage table is driver-size by construction; with no viewers
+    (n1 = 0) the shares are NULL, not an ANSI divide-by-zero."""
     w = W.partitionBy("user_id")
     ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     staged = (
@@ -343,7 +345,8 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("p_ts").alias("n3"))
     stage = lambda name, n: F.struct(  # noqa: E731
         F.lit(name).alias("stage"), F.col(n).alias("n_users"),
-        (F.col(n).cast("double") / F.col("n1")).alias("pct_of_entry"))
+        F.try_divide(F.col(n).cast("double"), F.col("n1"))
+        .alias("pct_of_entry"))
     return (
         counts.select(F.explode(F.array(
             stage("view", "n1"), stage("view>click", "n2"),

@@ -1,9 +1,9 @@
 """Empty-input regression gate: one representative key per failure
-class found by the round-8 degenerate sweep (tools/degenerate_check.py,
-record bench/DEGENERATE_r08.json — 8/243 keys crashed on 0-row
-tables). The full 243-key sweep stays a tool-tier check (~10 min);
-this pytest file pins the three FIX CLASSES fast so a regression to
-any of them fails the suite, not the next sweep:
+class found by the round-8 degenerate sweep (`tools/sweep.py --replica
+empty`, record bench/DEGENERATE_r08.json — 8/243 keys crashed on 0-row
+tables). The full 243-key sweep stays a tool-tier check; this file pins
+the three FIX CLASSES fast so a regression to any of them fails the
+suite, not the next sweep:
 
   1. empty partitioned write read back under the writer's explicit
      schema (no UNABLE_TO_INFER_SCHEMA on a data-file-less dir tree),
@@ -13,24 +13,14 @@ any of them fails the suite, not the next sweep:
      -> sql_to_pandas
   3. NULL aggregate over zero rows preserved, not int(None)-crashed
      -> tf_bloom_index
+  4. a ratio over an empty denominator is NULL (try_divide), not an
+     ANSI DIVIDE_BY_ZERO once the result is collected
+     -> event_funnel
 """
 
 from __future__ import annotations
 
 import pytest
-
-
-@pytest.fixture(scope="module")
-def empty_sf_dir(tmp_path_factory):
-    from tools.degenerate_check import build_empty_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("emptysf")
-    # source pinned explicitly: the schema-equality test below compares
-    # against SF_SMOKE, so the replica must not ride ambient env vars
-    build_empty_replica(SF_SMOKE, str(d))
-    return str(d)
 
 
 @pytest.mark.parametrize("key,want_rows", [
@@ -41,19 +31,15 @@ def empty_sf_dir(tmp_path_factory):
     ("sql_to_pandas", 0),
     # class 3: SUM over zero rows is NULL — carried, not int()-crashed
     ("tf_bloom_index", 1),
+    # class 4: a share over a zero denominator is NULL, not an ANSI
+    # DIVIDE_BY_ZERO (the 3 stage rows are still returned)
+    ("event_funnel", 3),
 ])
-def test_key_runs_on_empty_tables(spark, empty_sf_dir, key, want_rows):
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    try:
-        df = Q.REGISTRY[key].fn(spark, empty_sf_dir)
-        assert df.count() == want_rows
-    finally:
-        release_persisted()
+def test_key_runs_on_empty_tables(replica_verdict, key, want_rows):
+    assert replica_verdict("empty", key) == f"ROWS_ONLY rows={want_rows}"
 
 
-def test_empty_replica_preserves_schema(spark, empty_sf_dir):
+def test_empty_replica_preserves_schema(replica_dir):
     """The replica builder's contract: 0 rows, byte-identical logical
     types (ns timestamps included) — otherwise the sweep exercises a
     different schema than production would hand an empty partition."""
@@ -61,8 +47,9 @@ def test_empty_replica_preserves_schema(spark, empty_sf_dir):
 
     from tests.conftest import SF_SMOKE
 
+    d = replica_dir("empty")
     for t in ("events", "lineitem", "embeddings"):
         src = pq.read_schema(f"{SF_SMOKE}/{t}.parquet")
-        dst = pq.read_schema(f"{empty_sf_dir}/{t}.parquet")
+        dst = pq.read_schema(f"{d}/{t}.parquet")
         assert src.equals(dst), t
-        assert pq.read_table(f"{empty_sf_dir}/{t}.parquet").num_rows == 0
+        assert pq.read_table(f"{d}/{t}.parquet").num_rows == 0

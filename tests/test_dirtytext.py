@@ -1,9 +1,9 @@
 """Dirty-text regression gate: one representative key per fix class
-from the round-8/9 dirty-text sweep (tools/dirtytext_check.py, records
-bench/DIRTYTEXT_r*.json — 2/243 keys diverged on a corpus with ~5% of
-documents mutated through web-crawl text shapes). The full sweep stays
-a tool-tier check; this pytest file runs the FIX CLASSES fast so a
-regression fails the suite:
+from the round-8/9 dirty-text sweep (`tools/sweep.py --replica dirty`,
+records bench/DIRTYTEXT_r*.json — 2/243 keys diverged on a corpus with
+~5% of documents mutated through web-crawl text shapes). The full
+sweep stays a tool-tier check; this pytest file runs the FIX CLASSES
+fast so a regression fails the suite:
 
   1. trim must strip 0x20 ONLY, pinned on BOTH engines: Spark trim()
      already does, but DuckDB's default trim() also eats \\t \\n \\r
@@ -21,9 +21,9 @@ regression fails the suite:
      function diverges on any non-ASCII name; the sweep now mutates
      customer.c_name too) -> fn_levenshtein
 
-Each key runs on a dirty replica AND is compared against the DuckDB
-oracle reading the SAME replica — the full gate's logic, scoped to
-four keys.
+Each key runs on the dirty replica and is compared against the DuckDB
+oracle reading the SAME replica — the sweep's gate, scoped to these
+keys.
 """
 
 from __future__ import annotations
@@ -40,53 +40,20 @@ KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def dirty_sf_dir(tmp_path_factory):
-    from tools.dirtytext_check import build_dirty_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("dirtysf")
-    build_dirty_replica(SF_SMOKE, str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def oracle_con(dirty_sf_dir):
-    from tools.oracle_check import TABLES
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS "
-                    f"SELECT * FROM '{dirty_sf_dir}/{tbl}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_on_dirty_text(spark, dirty_sf_dir, oracle_con,
-                                          key):
-    from tools.oracle_check import compare
-
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    reg = Q.REGISTRY[key]
-    try:
-        verdict = compare(key, reg.fn(spark, dirty_sf_dir),
-                          reg.oracle, oracle_con)
-        assert verdict.startswith("OK"), verdict
-    finally:
-        release_persisted()
+def test_key_matches_oracle_on_dirty_text(replica_verdict, key):
+    verdict = replica_verdict("dirty", key)
+    assert verdict.startswith("OK"), verdict
 
 
-def test_dirty_replica_carries_the_divergent_shapes(dirty_sf_dir):
+def test_dirty_replica_carries_the_divergent_shapes(replica_dir):
     """Guard the fixture's premise: the replica must contain the two
     shapes that actually diverged (mixed-whitespace padding incl. NBSP
     and thin space for fix class 1, the Unicode casing zoo for fix
     class 2) or the tests above are vacuously clean-data."""
     import pyarrow.parquet as pq
 
+    dirty_sf_dir = replica_dir("dirty")
     texts = pq.read_table(f"{dirty_sf_dir}/documents.parquet") \
               .column("text").to_pylist()
     assert any(t is not None and " " in t and "\t" in t
@@ -99,8 +66,7 @@ def test_dirty_replica_carries_the_divergent_shapes(dirty_sf_dir):
                for n in names), "emoji class missing from c_name"
 
 
-def test_content_norm_is_engine_identical_on_probe_strings(spark,
-                                                           oracle_con):
+def test_content_norm_is_engine_identical_on_probe_strings(spark):
     """Direct parity probe of the shared normalization (the md5 input
     itself, not just downstream group counts): Spark content_norm_col
     vs the CONTENT_NORM_SQL DuckDB replica over every dirty class plus
@@ -111,7 +77,7 @@ def test_content_norm_is_engine_identical_on_probe_strings(spark,
         CONTENT_NORM_SQL,
         content_norm_col,
     )
-    from tools.dirtytext_check import DIRTY
+    from tools.sweep import DIRTY
 
     probes = list(DIRTY) + [
         "İstanbul", "ΣΟΦΟΣ", "STRASSE ß", " \t\n\r  \xa0   ",
@@ -122,7 +88,8 @@ def test_content_norm_is_engine_identical_on_probe_strings(spark,
     got = {r.i: r.n for r in
            df.select("i", content_norm_col("s").alias("n")).collect()}
     sql = CONTENT_NORM_SQL.format(col="?")
+    con = duckdb.connect()
     for i, s in enumerate(probes):
-        want = oracle_con.execute(f"SELECT {sql}", [s]).fetchone()[0]
+        want = con.execute(f"SELECT {sql}", [s]).fetchone()[0]
         assert got[i] == want, (
             f"probe {i}: spark={got[i]!r} duckdb={want!r} src={s[:40]!r}")

@@ -2,10 +2,10 @@
 values injected into double columns. Round 9 gated the RAW-FEED
 surface (stream_*/udf_*/udtf_*/ts_/sessionize_/event_ + extras, 43
 keys); round 10 promoted the same recipe onto the batch
-money/percentile surface, so `tools/extremes_check.py --gated` now
-covers the WHOLE registry minus the documented exclusion
-(tf_constraints — see test_tf_constraints_rejects_extremes_at_ingest),
-record bench/EXTREMES_r10.json.
+money/percentile surface, so `tools/sweep.py --replica extremes` now
+covers the WHOLE registry, record bench/EXTREMES_r10.json;
+tf_constraints counts there only by raising (see
+test_tf_constraints_rejects_extremes_at_ingest).
 
 The round-9 probe found one crash class and two engine divergences:
 
@@ -32,12 +32,11 @@ bench/EXTREMES_PROBE_full_r09.json): extremes are rejected at ingest
 there, exactly as tf_constraints rejects NULL keys.
 
 This file runs the fix-class keys against the DuckDB oracle on the
-SAME extremes replica — the full gate's logic, scoped fast.
+SAME extremes replica — the sweep's gate, scoped fast.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 KEYS = [
@@ -64,44 +63,10 @@ KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def extremes_sf_dir(tmp_path_factory):
-    from tools.extremes_check import build_extremes_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("extremesf")
-    build_extremes_replica(SF_SMOKE, str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def oracle_con(extremes_sf_dir):
-    from tools.oracle_check import TABLES
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS "
-                    f"SELECT * FROM '{extremes_sf_dir}/{tbl}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_on_extreme_values(spark, extremes_sf_dir,
-                                              oracle_con, key):
-    from tools.oracle_check import compare
-
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    reg = Q.REGISTRY[key]
-    try:
-        verdict = compare(key, reg.fn(spark, extremes_sf_dir),
-                          reg.oracle, oracle_con)
-        assert verdict.startswith("OK"), verdict
-    finally:
-        release_persisted()
+def test_key_matches_oracle_on_extreme_values(replica_verdict, key):
+    verdict = replica_verdict("extremes", key)
+    assert verdict.startswith("OK"), verdict
 
 
 def test_domain_bound_literals_match_the_constant():
@@ -132,7 +97,7 @@ def test_domain_bound_literals_match_the_constant():
     assert sites >= 35, f"only {sites} `<= 1e15` guard sites found"
 
 
-def test_extremes_replica_carries_the_edge_values(extremes_sf_dir):
+def test_extremes_replica_carries_the_edge_values(replica_dir):
     """Guard the fixture's premise: the replica must contain ±Inf and
     NaN in events.value (the column all six keys fold) or the tests
     above are vacuously clean-data."""
@@ -140,19 +105,20 @@ def test_extremes_replica_carries_the_edge_values(extremes_sf_dir):
 
     import pyarrow.parquet as pq
 
-    vals = [v for v in pq.read_table(f"{extremes_sf_dir}/events.parquet")
-            .column("value").to_pylist() if v is not None]
+    ev = pq.read_table(f"{replica_dir('extremes')}/events.parquet")
+    vals = [v for v in ev.column("value").to_pylist() if v is not None]
     assert any(math.isinf(v) for v in vals), "no Inf injected"
     assert any(math.isnan(v) for v in vals), "no NaN injected"
 
 
-def test_tf_constraints_rejects_extremes_at_ingest(spark, extremes_sf_dir):
-    """The documented extremes-gate exclusion: tf_constraints IS the
-    ingest CHECK gate, and on an extremes-injected corpus its correct
-    behavior is to REJECT the batch (-Inf/-1e300 order totals violate
-    price_nonneg at CREATE), not to return rows. This pin is the
-    machine-checked form of that contract — if the key ever starts
-    silently accepting non-finite money, the exclusion is void."""
+def test_tf_constraints_rejects_extremes_at_ingest(spark, replica_dir):
+    """The documented EXPECTED entry of the extremes sweep:
+    tf_constraints IS the ingest CHECK gate, and on an extremes-injected
+    corpus its correct behavior is to REJECT the batch (-Inf/-1e300
+    order totals violate price_nonneg at CREATE), not to return rows.
+    This pin is the machine-checked form of that contract — if the key
+    ever starts silently accepting non-finite money, the entry is
+    void."""
     from lakehouse_automation_spark import queries as Q
     from lakehouse_automation_spark.operators.cache import release_persisted
     from lakehouse_automation_spark.tableformat import (
@@ -161,6 +127,7 @@ def test_tf_constraints_rejects_extremes_at_ingest(spark, extremes_sf_dir):
 
     try:
         with pytest.raises(ConstraintViolationError, match="price_nonneg"):
-            Q.REGISTRY["tf_constraints"].fn(spark, extremes_sf_dir).collect()
+            Q.REGISTRY["tf_constraints"].fn(
+                spark, replica_dir("extremes")).collect()
     finally:
         release_persisted()

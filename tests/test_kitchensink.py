@@ -1,6 +1,6 @@
 """Kitchen-sink regression pin: a fast slice of the composed
-adversarial sweep (tools/kitchensink_check.py — ~3% NULLs + IEEE
-extremes + dirty text in ONE corpus, full record
+adversarial sweep (`tools/sweep.py --replica composed` — ~3% NULLs +
+IEEE extremes + dirty text + edge datetimes in ONE corpus, full record
 bench/KITCHENSINK_r10.json 242/242 OK). Interaction bugs between the
 three contracts (domain guard vs injected NULL, tokenizer vs NUL byte
 beside a NaN money cell, window tie-break NULL + value NaN) are
@@ -9,7 +9,6 @@ per contract family green in the suite."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 KEYS = [
@@ -23,53 +22,21 @@ KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def kitchensink_sf_dir(tmp_path_factory):
-    from tools.kitchensink_check import build_kitchensink_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("kitchensink")
-    build_kitchensink_replica(SF_SMOKE, str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def oracle_con(kitchensink_sf_dir):
-    from tools.oracle_check import TABLES
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS "
-                    f"SELECT * FROM '{kitchensink_sf_dir}/{tbl}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_on_composed_adversarial_corpus(
-        spark, kitchensink_sf_dir, oracle_con, key):
-    from tools.oracle_check import compare
-
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    reg = Q.REGISTRY[key]
-    try:
-        verdict = compare(key, reg.fn(spark, kitchensink_sf_dir),
-                          reg.oracle, oracle_con)
-        assert verdict.startswith("OK"), verdict
-    finally:
-        release_persisted()
+def test_key_matches_oracle_on_composed_adversarial_corpus(replica_verdict,
+                                                           key):
+    verdict = replica_verdict("composed", key)
+    assert verdict.startswith("OK"), verdict
 
 
-def test_replica_composes_all_three_axes(kitchensink_sf_dir):
+def test_replica_composes_all_three_axes(replica_dir):
     """Guard the fixture's premise: the composed corpus must carry
     NULLs AND non-finite doubles AND dirty text simultaneously."""
     import math
 
     import pyarrow.parquet as pq
 
+    kitchensink_sf_dir = replica_dir("composed")
     ev = pq.read_table(f"{kitchensink_sf_dir}/events.parquet")
     vals = ev.column("value").to_pylist()
     assert any(v is None for v in vals), "no NULLs survived composition"

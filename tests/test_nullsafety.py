@@ -1,9 +1,9 @@
 """Null-input regression gate: one representative key per fix class
-from the round-8 null-injection sweep (tools/null_check.py, record
-bench/NULLSWEEP_r08.json — 27/243 keys diverged or crashed on ~3%
-null-injected value columns). The full sweep (Spark vs DuckDB on the
-same dirty replica) stays a tool-tier check; this pytest file runs
-the FIX CLASSES fast so a regression fails the suite:
+from the round-8 null-injection sweep (`tools/sweep.py --replica null`,
+record bench/NULLSWEEP_r08.json — 27/243 keys diverged or crashed on
+~3% null-injected value columns). The full sweep stays a tool-tier
+check; this file runs the FIX CLASSES fast so a regression fails the
+suite:
 
   1. NULL group key must survive an aggregate re-attach join
      -> udf_grouped_agg (eqNullSafe)
@@ -17,23 +17,22 @@ the FIX CLASSES fast so a regression fails the suite:
      and mirrored in the shared _VNORM oracle CTE
      -> vec_knn_join
   6. r17 re-plan representatives (the STANDING RULE from the r16
-     verdict #9: every re-plan must pass tools/null_check.py on its
-     touched keys BEFORE merging — the ts_changepoint seam, where a
-     re-plan changed NULL-group semantics and the oracle was edited
-     to absorb it, must be caught pre-merge, never settled by an
-     oracle edit — and leaves one representative pinned here)
+     verdict #9: every re-plan must pass the null sweep on its touched
+     keys BEFORE merging — the ts_changepoint seam, where a re-plan
+     changed NULL-group semantics and the oracle was edited to absorb
+     it, must be caught pre-merge, never settled by an oracle edit —
+     and leaves one representative pinned here)
      -> vec_ivf_topk (JVM-expression argmax: NULL norm / poisoned
         centroid ordering), curate_pipeline (fused quality + exact
         window scan)
 
-Each key runs on a null replica AND its result is compared against
-the DuckDB oracle reading the SAME replica — the full gate's logic,
-scoped to these keys (~1-2 min).
+Each key runs on the null replica and is compared against the DuckDB
+oracle reading the SAME replica — the sweep's gate, scoped to these
+keys.
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 KEYS = [
@@ -48,51 +47,17 @@ KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def null_sf_dir(tmp_path_factory):
-    from tools.null_check import build_null_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("nullsf")
-    build_null_replica(SF_SMOKE, str(d))
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def oracle_con(null_sf_dir):
-    from tools.null_check import TABLES
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS "
-                    f"SELECT * FROM '{null_sf_dir}/{tbl}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_on_null_data(spark, null_sf_dir, oracle_con,
-                                         key):
-    from tools.oracle_check import compare
-
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    reg = Q.REGISTRY[key]
-    try:
-        verdict = compare(key, reg.fn(spark, null_sf_dir),
-                          reg.oracle, oracle_con)
-        assert verdict.startswith("OK"), verdict
-    finally:
-        release_persisted()
+def test_key_matches_oracle_on_null_data(replica_verdict, key):
+    verdict = replica_verdict("null", key)
+    assert verdict.startswith("OK"), verdict
 
 
-def test_null_replica_actually_carries_nulls(null_sf_dir):
+def test_null_replica_actually_carries_nulls(replica_dir):
     """Guard the fixture's premise: the replica must inject NULLs into
     value columns or every test above is vacuously clean-data."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{null_sf_dir}/lineitem.parquet")
+    t = pq.read_table(f"{replica_dir('null')}/lineitem.parquet")
     assert t.column("l_quantity").null_count > 100
     assert t.column("l_orderkey").null_count == 0  # keys stay non-null

@@ -1,8 +1,8 @@
 """Pytest pins for the round-8 PARTITION-INVARIANCE fix classes.
 
-tools/partition_check.py reruns the whole oracle gate under
-adversarial execution geometry (AQE off / partitions > rows / 64 KiB
-input splits) — ~25 min, tool tier. These tests pin the two fix
+`tools/sweep.py --replica clean --profile fewtasks|manysplits` reruns
+the whole oracle gate under adversarial execution geometry (AQE off /
+partitions > rows / 64 KiB input splits) — ~25 min, tool tier. These tests pin the two fix
 classes it caught so a regression fails the suite in seconds:
 
 1. theta_intersection_agg's partial buffer cannot serialize its

@@ -6,8 +6,8 @@ repeated scan is a defect ONLY when a row-expanding derivation
 source. These tests pin the gate's sensitivity (it must FLAG the two
 real r14 defects, preserved as fixtures) and its current verdict
 (the published PLANS.md and the three re-planned text keys lint
-clean). The all-243-key build-and-lint runs in the sweep matrix
-(tools/run_sweep_matrix.sh -> bench/PLANLINT_rNN.json), not here.
+clean). The all-243-key build-and-lint runs first in the sweep matrix
+(`tools/sweep.py --matrix rNN` -> bench/PLANLINT_rNN.json), not here.
 """
 
 from __future__ import annotations

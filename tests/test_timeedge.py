@@ -1,5 +1,6 @@
-"""Extreme-timestamp regression pins (tools/timeedge_check.py): edge
-datetimes injected into events.ts — epoch-zero sentinels, negative
+"""Extreme-timestamp regression pins (`tools/sweep.py --replica
+timeedge-events` and `timeedge-relational`): edge datetimes injected
+into events.ts — epoch-zero sentinels, negative
 epochs (the floor-vs-truncate division landmine: Spark's `div`
 truncates toward zero, DuckDB's `//` floors, so 1969-12-31 23:59 is
 day 0 in one spelling and day -1 in the other), century leap days, the
@@ -22,7 +23,6 @@ fn_datetime."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 KEYS = [
@@ -41,53 +41,18 @@ KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def timeedge_sf_dir(tmp_path_factory):
-    from tools.timeedge_check import build_timeedge_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("timeedge")
-    n = build_timeedge_replica(SF_SMOKE, str(d))
-    assert n > 0, "no edge timestamps injected"
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def oracle_con(timeedge_sf_dir):
-    from tools.oracle_check import TABLES
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS "
-                    f"SELECT * FROM '{timeedge_sf_dir}/{tbl}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("key", KEYS)
-def test_key_matches_oracle_on_edge_timestamps(spark, timeedge_sf_dir,
-                                               oracle_con, key):
-    from tools.oracle_check import compare
-
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    reg = Q.REGISTRY[key]
-    try:
-        verdict = compare(key, reg.fn(spark, timeedge_sf_dir),
-                          reg.oracle, oracle_con)
-        assert verdict.startswith("OK"), verdict
-    finally:
-        release_persisted()
+def test_key_matches_oracle_on_edge_timestamps(replica_verdict, key):
+    verdict = replica_verdict("timeedge-events", key)
+    assert verdict.startswith("OK"), verdict
 
 
-def test_replica_carries_negative_epochs(timeedge_sf_dir):
+def test_replica_carries_negative_epochs(replica_dir):
     import datetime as dt
 
     import pyarrow.parquet as pq
 
-    ts = pq.read_table(f"{timeedge_sf_dir}/events.parquet") \
+    ts = pq.read_table(f"{replica_dir('timeedge-events')}/events.parquet") \
         .column("ts").to_pylist()
     assert any(t is not None and t < dt.datetime(1970, 1, 1) for t in ts)
     assert any(t is not None and t > dt.datetime(2200, 1, 1) for t in ts)
@@ -97,7 +62,7 @@ def test_replica_carries_negative_epochs(timeedge_sf_dir):
 
 #: Representative relational-date keys (full scope = every key whose
 #: source/oracle reads l_shipdate or o_orderdate — discovered by
-#: tools.timeedge_check.relational_probe_keys; full-gate record:
+#: tools.sweep.timeedge_relational_keys; full-gate record:
 #: bench/TIMEEDGE_relational_r11.json):
 #: - flagship_pricing_summary: the shipdate filter boundary
 #: - project_rename_cast: o_orderdate passes through the result, so
@@ -118,48 +83,13 @@ REL_KEYS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def timeedge_rel_sf_dir(tmp_path_factory):
-    from tools.timeedge_check import SURFACES, build_timeedge_replica
-
-    from tests.conftest import SF_SMOKE
-
-    d = tmp_path_factory.mktemp("timeedge_rel")
-    n = build_timeedge_replica(SF_SMOKE, str(d), SURFACES["relational"])
-    assert n > 0, "no edge dates injected"
-    return str(d)
-
-
-@pytest.fixture(scope="module")
-def rel_oracle_con(timeedge_rel_sf_dir):
-    from tools.oracle_check import TABLES
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS "
-                    f"SELECT * FROM '{timeedge_rel_sf_dir}/{tbl}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("key", REL_KEYS)
-def test_key_matches_oracle_on_edge_dates_relational(
-        spark, timeedge_rel_sf_dir, rel_oracle_con, key):
-    from tools.oracle_check import compare
-
-    from lakehouse_automation_spark import queries as Q
-    from lakehouse_automation_spark.operators.cache import release_persisted
-
-    reg = Q.REGISTRY[key]
-    try:
-        verdict = compare(key, reg.fn(spark, timeedge_rel_sf_dir),
-                          reg.oracle, rel_oracle_con)
-        assert verdict.startswith("OK"), verdict
-    finally:
-        release_persisted()
+def test_key_matches_oracle_on_edge_dates_relational(replica_verdict, key):
+    verdict = replica_verdict("timeedge-relational", key)
+    assert verdict.startswith("OK"), verdict
 
 
-def test_replica_carries_full_range_sentinels(timeedge_rel_sf_dir):
+def test_replica_carries_full_range_sentinels(replica_dir):
     """The r11 edge set includes the year-9999 and year-0001 sentinels
     the old pandas-bound comparator could not transit (VERDICT r10
     ask #6) — prove the replica actually carries them into
@@ -167,8 +97,8 @@ def test_replica_carries_full_range_sentinels(timeedge_rel_sf_dir):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    od = pq.read_table(
-        f"{timeedge_rel_sf_dir}/orders.parquet").column("o_orderdate")
+    od = pq.read_table(f"{replica_dir('timeedge-relational')}"
+                       "/orders.parquet").column("o_orderdate")
     years = pc.year(od)
     assert pc.min(years).as_py() == 1
     assert pc.max(years).as_py() == 9999

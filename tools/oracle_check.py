@@ -13,6 +13,11 @@ surprises.
 machine-readable local-green trail for keys outside the driver's
 50-slot official fold (tools/sweep_plan.py reads round coverage from
 the OFFICIAL files only; this record never substitutes for them).
+
+``run_gate`` is the one per-key gate loop: this CLI, the adversarial
+replica sweeps (tools/sweep.py) and the replica pytest pins all call
+it (or ``check_key`` for one key), so every caller judges a key the
+same way.
 """
 
 from __future__ import annotations
@@ -28,8 +33,7 @@ import pandas as pd
 # root (not tools/) on sys.path so the package imports resolve.
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Env-overridable so robustness sweeps (tools/null_check.py) can point
-# the whole gate — Spark side AND DuckDB views — at a replica dir.
+# Env-overridable so the gate can point at another sf dir.
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -143,20 +147,84 @@ def compare(key: str, spark_df, oracle: str | None, con) -> str:
     return f"OK rows={len(a)}"
 
 
+#: Verdict statuses that pass the gate: a matching result, a key with
+#: no oracle that ran, and a documented enforcement error (see
+#: ``check_key``'s ``expected``).
+PASS = ("OK", "ROWS_ONLY", "ENFORCED")
+
+
+def connect(sf_dir: str):
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check_key(spark, key: str, sf_dir: str, con,
+              expected: str | None = None) -> str:
+    """Run one registry key on ``sf_dir`` and return its verdict line;
+    the first word is the status. ``con=None`` judges the key only on
+    running and returning (``ROWS_ONLY``). ``expected`` names the
+    exception class that is the key's correct answer on this input (a
+    constraint that must refuse the batch): raising it is ``ENFORCED``,
+    returning rows instead is ``NOT_ENFORCED``, and any other exception
+    still fails the key. Persisted state is released either way, so
+    nothing accumulates across a sweep."""
+    from lakehouse_automation_spark.operators.cache import release_persisted
+    from lakehouse_automation_spark.queries import REGISTRY
+
+    q = REGISTRY[key]
+    try:
+        res = compare(key, q.fn(spark, sf_dir),
+                      q.oracle if con is not None else None, con)
+        if expected:
+            res = f"NOT_ENFORCED expected {expected}, got {res}"
+    except Exception as e:  # noqa: BLE001
+        # `or [""]`: an empty exception message has no lines and
+        # would crash the SWEEP instead of failing the KEY
+        first = (str(e).splitlines() or [""])[0]
+        name = type(e).__name__
+        res = (f"ENFORCED {name}: {first[:300]}" if name == expected
+               else f"ERROR {name}: {first[:300]}")
+    finally:
+        release_persisted()
+    return res
+
+
+def run_gate(spark, sf_dir: str, keys, *, oracle: bool = True,
+             expected: dict[str, str] | None = None) -> dict[str, dict]:
+    """``check_key`` over ``keys`` in order, printing one line per key
+    and a summary; returns the record ``{key: {status, detail}}``."""
+    con = connect(sf_dir) if oracle else None
+    record: dict[str, dict] = {}
+    try:
+        for key in keys:
+            res = check_key(spark, key, sf_dir, con,
+                            (expected or {}).get(key))
+            record[key] = {"status": res.split(" ")[0], "detail": res}
+            print(f"{key:28s} {res}", flush=True)
+    finally:
+        if con is not None:
+            con.close()
+    print(f"\n{len(record)} keys, {len(failures(record))} failures")
+    return record
+
+
+def failures(record: dict[str, dict]) -> list[str]:
+    return [k for k, v in record.items() if v["status"] not in PASS]
+
+
+def write_record(record: dict[str, dict], path: str) -> None:
+    import json
+
+    with open(path, "w") as fh:
+        json.dump(record, fh, indent=1, sort_keys=True)
+
+
 def main() -> int:
     from lakehouse_automation_spark.engine import get_spark, load_tables
     from lakehouse_automation_spark.queries import REGISTRY
-
-    spark = get_spark("oracle_check")
-    load_tables(spark, SF_DIR)
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-
-    # registration order — the same order the driver's sweep uses, so a
-    # key that wedges shows up at the same position it would there
-    from lakehouse_automation_spark.operators.cache import release_persisted
 
     args = sys.argv[1:]
     out_json = None
@@ -164,34 +232,20 @@ def main() -> int:
         i = args.index("--json")
         out_json = args[i + 1]
         args = args[:i] + args[i + 2:]
+    # registration order — the same order the driver's sweep uses, so a
+    # key that wedges shows up at the same position it would there
     keys = args or list(REGISTRY)
     unknown = [k for k in keys if k not in REGISTRY]
     if unknown:
         print(f"unknown keys: {unknown}", file=sys.stderr)
         return 2
-    record: dict[str, dict] = {}
-    failures = 0
-    for key in keys:
-        q = REGISTRY[key]
-        try:
-            res = compare(key, q.fn(spark, SF_DIR), q.oracle, con)
-        except Exception as e:  # noqa: BLE001
-            # `or [""]`: an empty exception message has no lines and
-            # would crash the SWEEP instead of failing the KEY
-            first = (str(e).splitlines() or [""])[0]
-            res = f"ERROR {type(e).__name__}: {first[:300]}"
-        release_persisted()  # no cache accumulation across the sweep
-        status = res.split(" ")[0]
-        if status not in ("OK", "ROWS_ONLY"):
-            failures += 1
-        record[key] = {"status": status, "detail": res}
-        print(f"{key:28s} {res}")
-    print(f"\n{len(keys)} keys, {failures} failures")
+
+    spark = get_spark("oracle_check")
+    load_tables(spark, SF_DIR)
+    record = run_gate(spark, SF_DIR, keys)
     if out_json:
-        import json as _json
-        with open(out_json, "w") as fh:
-            _json.dump(record, fh, indent=1, sort_keys=True)
-    return 1 if failures else 0
+        write_record(record, out_json)
+    return 1 if failures(record) else 0
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""§4-protocol re-measure, the standing tool (generalized from
-tools/remeasure_r12.py): min of >=6 warm runs per key, ONE process,
+"""§4-protocol re-measure, the standing tool (generalized from the
+round-12 one-off): min of >=6 warm runs per key, ONE process,
 interleaved with the §9 control keys, judged against the EPOCH-2
 baseline (BASELINE.md §11 reading rule). Use whenever a single-pass
 BENCH record reads above its same-window control spread — a
